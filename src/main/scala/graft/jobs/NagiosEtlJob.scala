@@ -1,6 +1,9 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -23,30 +26,42 @@ import graft.sources.Sinks
   * Exactly-once into the sink without a transactional store: the
   * melted payload is anti-join-deduped against the rows already in
   * the sink's RECENT `load_date` partitions (`extract.py:115-132`'s
-  * cross-run dedup — whole-row 256-bit identity), so a tick that died
-  * between its parquet append and its checkpoint commit re-processes
-  * the batch on restart and the dedup drops every already-landed row
-  * — append + dedup composes to idempotent. The dedup window is
-  * BOUNDED (r10, ADVICE r9): rows re-deliverable into this tick can
-  * only have landed within the re-delivery horizon (a crash-restart
-  * re-append lands the same UTC day it crashed; an exporter re-send
-  * arrives within its retention), so the anti-join reads only
-  * partitions with `load_date >= today_UTC − dedupHorizonDays`
-  * (default 7) — partition-pruned at the scan, NOT a full-sink read,
-  * matching the reference's previous-extract-only bound while
-  * covering multi-day outages. Per-tick dedup cost is therefore
-  * O(horizon ingest), flat in total sink history. Load failures
-  * quarantine the payload to a UTC-timestamped path for replay
-  * instead of losing it (`load_to_db.py:60-62`); the timestamp (ms
-  * precision) + batch id keeps paths unique even after a checkpoint
-  * reset restarts batch ids at 0 — a second same-day failure can
-  * never overwrite an earlier quarantined payload.
+  * cross-run dedup — whole-row identity on the typed columns), so a
+  * tick that died between its parquet append and its checkpoint
+  * commit re-processes the batch on restart and the dedup drops every
+  * already-landed row — append + dedup composes to idempotent. The
+  * dedup window is BOUNDED (r10, ADVICE r9): rows re-deliverable into
+  * this tick can only have landed within the re-delivery horizon (a
+  * crash-restart re-append lands the same UTC day it crashed; an
+  * exporter re-send arrives within its retention), so the anti-join
+  * reads only partitions with `load_date >= today_UTC −
+  * dedupHorizonDays + 1` (default 7 days), matching the reference's
+  * previous-extract-only bound while covering multi-day outages. The
+  * partitions are picked from directory names and only they are
+  * listed, and the sink is read with its known schema (no footer job
+  * to infer it), so a tick's dedup cost is O(horizon ingest): flat in
+  * total sink history, apart from one listing of each family dir's
+  * partition names. Load failures quarantine the payload to a
+  * UTC-timestamped path for replay instead of losing it
+  * (`load_to_db.py:60-62`); the timestamp (ms precision) + batch id
+  * keeps paths unique even after a checkpoint reset restarts batch
+  * ids at 0 — a second same-day failure can never overwrite an
+  * earlier quarantined payload.
+  *
+  * Session reuse: Spark runs a stream's batches in a clone of the
+  * caller's session, and each `runOnce` starts a new stream, so each
+  * tick got a fresh session — and with it a fresh executor
+  * classloader, which misses the codegen cache and recompiles every
+  * class of the tick's plan. The batch is re-rooted in the caller's
+  * session instead ([[ingestBatch]]), so a long-lived driver that
+  * ticks repeatedly compiles the tick's code once.
   *
   * Scale posture: one cron tick at 100 TB fleet size is a bounded
-  * file listing (only unconsumed files), a map-side flatten/melt, one
-  * anti-join exchange against the horizon partitions' row keys, and a
-  * (family, load_date)-partitioned append — the same plan SURVEY §3.1
-  * argues for, wrapped in the orchestration the reference runs with.
+  * file listing (only unconsumed files and the horizon partitions), a
+  * map-side flatten/melt, one anti-join exchange against the horizon
+  * partitions' rows, and a (family, load_date)-partitioned append —
+  * the same plan SURVEY §3.1 argues for, wrapped in the orchestration
+  * the reference runs with.
   */
 object NagiosEtlJob {
 
@@ -121,19 +136,23 @@ object NagiosEtlJob {
     * propagates, for the same reason.
     */
   private[graft] def containsCommittedParquet(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean = {
+      fs: FileSystem, dir: Path): Boolean = {
     val magic = Array[Byte]('P', 'A', 'R', '1')
-    val it = fs.listFiles(dir, /*recursive=*/ true)
+    // listed paths come back qualified (scheme + authority): compare
+    // against the qualified root, or the ancestor walk below never
+    // stops at it and a `_`/`.` ancestor ABOVE the sink marks every
+    // committed file as scratch
+    val root = fs.makeQualified(dir)
+    val it = fs.listFiles(root, /*recursive=*/ true)
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
       val hidden = // Spark/Hadoop convention: not part of the dataset
         name.startsWith("_") || name.startsWith(".")
-      val inScratch = { // any _temporary/.staging ancestor up to dir
+      val inScratch = { // any _temporary/.staging ancestor below root
         var p = st.getPath.getParent
         var found = false
-        while (p != null && p != dir && !found) {
+        while (p != null && p != root && !found) {
           val n = p.getName
           found = n.startsWith("_") || n.startsWith(".")
           p = p.getParent
@@ -155,10 +174,85 @@ object NagiosEtlJob {
     false
   }
 
+  /** The sink's `load_date` partition dirs, read from directory names
+    * alone (no file listing, no footer read): `Some(dirs)` on the
+    * (metric_family, load_date) layout, `None` on the pre-load_date
+    * layout that partitions on metric_family alone. Mixed depths —
+    * data files beside `load_date` dirs, which Spark's partition
+    * discovery refuses to read — fail the tick loudly: appending to
+    * such a sink or dedup-reading part of it would hide the damage.
+    */
+  private[graft] def loadDateDirs(fs: FileSystem,
+      dataDir: Path): Option[Seq[Path]] = {
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val (families, rootFiles) =
+      fs.listStatus(dataDir).toSeq.filter(visible).partition(_.isDirectory)
+    val (dated, familyFiles) = families
+      .flatMap(f => fs.listStatus(f.getPath).toSeq.filter(visible))
+      .partition(st =>
+        st.isDirectory && st.getPath.getName.startsWith("load_date="))
+    if (dated.isEmpty) None
+    else if (rootFiles.nonEmpty || familyFiles.nonEmpty)
+      throw new IllegalStateException(s"$dataDir mixes partition " +
+        "depths: data files beside load_date partitions, e.g. " +
+        (rootFiles ++ familyFiles).head.getPath)
+    else Some(dated.map(_.getPath))
+  }
+
+  /** The committed rows a tick dedups against, read with the sink's
+    * known `schema` (no footer job to infer it) from only the
+    * horizon's `load_date >= minLoadDate` partitions, so the file
+    * index lists the horizon, never the sink's history. Returns the
+    * rows (`None`: nothing committed in the horizon) and whether the
+    * sink is on the pre-load_date layout, which is read whole.
+    *
+    * A dir that EXISTS but holds no committed parquet footer (a first
+    * append that died before any footer landed) counts as empty: the
+    * pre-r10 behavior threw here on every subsequent tick, wedging the
+    * job with nothing ever quarantined (ADVICE r10). The probe is a
+    * footer scan, NOT a catch around the read: a blanket NonFatal
+    * catch turned any transient read failure on a HEALTHY sink into a
+    * silent dedup-off tick (ADVICE r11). A sink with committed data
+    * that fails to list or read propagates the failure loudly.
+    */
+  private[graft] def sinkHorizon(spark: SparkSession, dataDir: String,
+      schema: StructType,
+      minLoadDate: String): (Option[DataFrame], Boolean) = {
+    val path = new Path(dataDir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(paths: Seq[Path]) =
+      spark.read.schema(schema).parquet(paths.map(_.toString): _*)
+        .select(schema.fieldNames.toSeq.map(col): _*)
+    val exists = fs.exists(path)
+    if (!exists || !containsCommittedParquet(fs, path)) {
+      if (exists) System.err.println(
+        s"[nagios-etl] $dataDir exists but holds no committed " +
+          "parquet footer (aborted first append) — treating as an " +
+          "empty sink; dedup starts fresh this tick")
+      (None, false)
+    } else loadDateDirs(fs, path) match {
+      case None =>
+        System.err.println(
+          s"[nagios-etl] $dataDir uses the pre-load_date layout: dedup " +
+            "is full-sink and unbounded for this sink — rewrite it " +
+            "partitioned by (metric_family, load_date) to bound tick cost")
+        (Some(read(Seq(path))), true)
+      case Some(dirs) =>
+        // ISO dates compare correctly as strings
+        val horizon = dirs.filter(
+          _.getName.stripPrefix("load_date=") >= minLoadDate)
+        (if (horizon.isEmpty) None else Some(read(horizon)), false)
+    }
+  }
+
   /** Flatten → melt → dedup-vs-recent-sink-partitions → (family,
     * load_date)-partitioned append, with the quarantine failure path.
     * Public so a long-running deployment can mount the same logic on
-    * a continuous trigger.
+    * a continuous trigger. The batch runs in `spark`, whatever session
+    * it came from (see object doc).
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, outDir: String,
       services: Seq[String], batchId: Long,
@@ -166,6 +260,7 @@ object NagiosEtlJob {
     require(dedupHorizonDays >= 1,
       "dedupHorizonDays must cover at least the current day")
     val dataDir = s"$outDir/data"
+    val docs = ColumnBridge.inSession(spark, batch)
     // A tick's batch is a handful of compact response documents whose
     // real weight is DOWNSTREAM of the scan (each doc explodes into
     // its window's points, then melts per metric): a small file batch
@@ -178,18 +273,13 @@ object NagiosEtlJob {
     // parallelism, not a constant, so it scales with the deployment.
     val width = spark.sparkContext.defaultParallelism
     val spread =
-      if (batch.rdd.getNumPartitions < width) batch.repartition(width)
-      else batch
+      if (docs.rdd.getNumPartitions < width) docs.repartition(width)
+      else docs
     val payload = HostMetrics.longPayload(
       HostMetrics.flattenResponses(spread), services)
-    val path = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // all times UTC: the session timezone is pinned UTC, so path
     // components and partition values must not leak the JVM default
     val todayUtc = java.time.LocalDate.now(java.time.ZoneOffset.UTC)
-    // ISO dates compare correctly as strings, so this predicate prunes
-    // load_date partitions at the scan — per-tick dedup reads only the
-    // re-delivery horizon, never the whole sink history
     val minLoadDate = todayUtc.minusDays(dedupHorizonDays - 1L).toString
     // migration guard: a sink written by a pre-load_date deployment
     // partitions on metric_family alone; appending the new two-level
@@ -197,50 +287,14 @@ object NagiosEtlJob {
     // discovery refuses to read — so an old sink stays entirely on its
     // old layout (full-sink dedup, family-only partitions, the pre-r10
     // behavior) until the operator rewrites it, and only new sinks get
-    // the bounded-window layout. Detected from the sink's own schema.
-    // A dir that EXISTS but holds no committed parquet footer (a first
-    // append that died before any footer landed) counts as
-    // nonexistent: the pre-r10 behavior threw here on every subsequent
-    // tick, wedging the job with nothing ever quarantined (ADVICE
-    // r10). The probe is a footer scan, NOT a catch around the read: a
-    // blanket NonFatal catch turned any transient read failure (FS
-    // hiccup, permissions, concurrent writer) on a HEALTHY sink into a
-    // silent dedup-off tick — and worse, read oldLayout=false off an
-    // old-layout sink, appending mixed partition depths that Spark's
-    // discovery then refuses to read (ADVICE r11). With the probe, a
-    // sink that demonstrably contains committed data but fails to read
-    // propagates the failure loudly, and oldLayout can only ever be
-    // computed from a successful read.
-    val sinkDf: Option[DataFrame] =
-      if (!fs.exists(path) || !containsCommittedParquet(fs, path)) {
-        if (fs.exists(path)) System.err.println(
-          s"[nagios-etl] $dataDir exists but holds no committed " +
-            "parquet footer (aborted first append) — treating as an " +
-            "empty sink; dedup starts fresh this tick")
-        None
-      } else Some(spark.read.parquet(dataDir))
-    val oldLayout =
-      sinkDf.exists(!_.columns.contains("load_date"))
-    if (oldLayout) System.err.println(
-      s"[nagios-etl] $dataDir uses the pre-load_date layout: dedup is " +
-        "full-sink and unbounded for this sink — rewrite it " +
-        "partitioned by (metric_family, load_date) to bound tick cost")
-    val previous = sinkDf match {
-      case None => payload.limit(0)
-      case Some(sink) =>
-        val bounded =
-          if (oldLayout) sink
-          else sink.filter(
-            org.apache.spark.sql.functions.col("load_date") >= minLoadDate)
-        bounded.select(
-          payload.columns.map(org.apache.spark.sql.functions.col).toSeq: _*)
-    }
+    // the bounded-window layout
+    val (previous, oldLayout) =
+      sinkHorizon(spark, dataDir, payload.schema, minLoadDate)
     val deduped = HostMetrics.routed(
-      HostMetrics.dedupAgainst(payload, previous))
+      previous.fold(payload)(HostMetrics.dedupAgainst(payload, _)))
     val fresh =
       if (oldLayout) deduped
-      else deduped.withColumn("load_date",
-        org.apache.spark.sql.functions.lit(todayUtc.toString))
+      else deduped.withColumn("load_date", lit(todayUtc.toString))
     Sinks.writeWithQuarantine(fresh, s"$outDir/quarantine",
         quarantineTag(batchId)) {
       df => df.write.mode("append")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Relational operator surface (SURVEY §2.3, §2.4, §2.6), each a pure
   * `DataFrame => DataFrame` transform that declares the logical plan and
@@ -11,9 +12,9 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB, 1000 executors):
   *  - membership/enrichment joins keep the small side broadcastable; the
   *    big fact side never shuffles for them.
-  *  - dedup variants that MUST shuffle (anti-join, distinct) shuffle on
-  *    a compact hash key, not whole rows, so the exchange payload stays
-  *    narrow.
+  *  - the anti-join dedup joins on the typed row columns, which are
+  *    narrower than a hash key built from them; the snapshot diff,
+  *    which compares a wide value set per key, exchanges its hash.
   *  - latest-per-key avoids a global sort: it is a hash repartition by
   *    key + per-partition sort (window), fully parallel.
   */
@@ -52,19 +53,41 @@ object Relational {
     * `json.dumps(sort_keys=True)`; Spark resolves join keys by name so
     * ordering is moot).
     *
-    * At 100 TB the exchange ships only a 256-bit row hash per side, not
-    * the full row: both sides are hashed (F11), anti-joined on the hash,
-    * and the surviving hashes keep their payload columns. Null-safe
-    * equality is inherent (hash of null is stable), unlike a naive
-    * multi-column join where `null = null` is false.
+    * The join compares the typed columns null-safely (`<=>`), so no
+    * per-row key is built: a hashed key (F11's 64-char hex of the
+    * string-cast row) is wider than the few columns it stands for and
+    * costs a cast + concat + SHA-256 per row on both sides. Equality
+    * is the string form's, exactly: join keys treat NaN = NaN (so does
+    * `"NaN"`), and a companion key keeps `-0.0` apart from `0.0`,
+    * which the join would otherwise merge but the reference's
+    * `json.dumps` keeps distinct. A map column (not a valid join key)
+    * or a nested column holding floats (where the join would merge
+    * `-0.0` into `0.0`) compares as its string cast, as F11 does.
     */
   def antiJoinDedup(current: DataFrame, previous: DataFrame): DataFrame = {
-    val cols = current.columns.toSeq
-    val key = graft.functions.ScalarOps.canonicalRowKey(cols)
-    current.withColumn("__row_key", key)
-      .join(previous.select(key.as("__row_key")), Seq("__row_key"),
-        "left_anti")
-      .drop("__row_key")
+    def keys(df: DataFrame): Seq[Column] =
+      current.schema.fields.toSeq.flatMap { f =>
+        val c = df(f.name)
+        f.dataType match {
+          case FloatType | DoubleType =>
+            Seq(c, when(c === 0, c.cast("string")))
+          case dt if mapOrFloat(dt) => Seq(c.cast("string"))
+          case _ => Seq(c)
+        }
+      }
+    val prev = previous.select(keys(previous).zipWithIndex.map {
+      case (k, i) => k.as(s"__prev_$i")
+    }: _*)
+    current.join(prev, keys(current).zipWithIndex.map {
+      case (k, i) => k <=> prev(s"__prev_$i")
+    }.reduce(_ && _), "left_anti")
+  }
+
+  private def mapOrFloat(dt: DataType): Boolean = dt match {
+    case _: MapType | FloatType | DoubleType => true
+    case ArrayType(e, _) => mapOrFloat(e)
+    case StructType(fs) => fs.exists(f => mapOrFloat(f.dataType))
+    case _ => false
   }
 
   /** J4 — cross-product fan-out: every host × every registered service

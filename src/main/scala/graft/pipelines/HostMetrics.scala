@@ -17,9 +17,9 @@ import graft.operators.Relational
   *
   * Scale: at 100 TB the fetch fan-out table is repartitioned to cluster
   * width; per-family pivots are narrow `select`s (no shuffle); dedup
-  * exchanges 256-bit row hashes only; the family routing is a single
-  * `partitionBy` write, not 4 scans (`load_to_db.py:34-48` does 4
-  * passes over the payload).
+  * joins on the typed row columns, no per-row hash; the family routing
+  * is a single `partitionBy` write, not 4 scans (`load_to_db.py:34-48`
+  * does 4 passes over the payload).
   */
 object HostMetrics {
 

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -14,6 +14,19 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `df`'s logical plan as a DataFrame of `spark`. A `foreachBatch`
+    * frame belongs to the stream's cloned session, whose fresh session
+    * UUID gives every query its own executor classloader — and the
+    * codegen cache is per classloader, so each query recompiles the
+    * same classes. Re-rooted in a long-lived session, the batch's
+    * downstream plan compiles once per JVM.
+    */
+  def inSession(spark: SparkSession, df: DataFrame): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+        .queryExecution.logical)
 
   /** Register a SQL function on a LIVE session (sessionState is
     * `private[sql]`); the extensions path (`graft.GraftExtensions`)

@@ -104,6 +104,61 @@ class JobSpec extends SparkSpec {
     NagiosEtlJob.runOnce(spark, in, out, s"$base/ckptw", services,
       dedupHorizonDays = 60)
     assert(sink().count() == 2)
+    // the dedup scan's file index holds only the horizon's partitions:
+    // today's is listed, the 30-day-old one is never even listed
+    val schema = sink().drop("metric_family", "load_date").schema
+    def scanned(days: Int): Seq[String] = {
+      val minLoadDate = today.minusDays(days - 1L).toString
+      val (rows, oldLayout) = NagiosEtlJob.sinkHorizon(
+        spark, s"$out/data", schema, minLoadDate)
+      assert(!oldLayout)
+      rows.toSeq.flatMap(_.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location
+      }).flatMap(loc => loc.rootPaths.map(_.toString) ++ loc.inputFiles)
+    }
+    def loadDates(paths: Seq[String]) =
+      paths.map("load_date=[^/]+".r.findFirstIn(_).get).distinct.sorted
+    assert(loadDates(scanned(7)) == Seq(s"load_date=$today"))
+    assert(loadDates(scanned(60)) ==
+      Seq(s"load_date=${today.minusDays(30)}", s"load_date=$today"))
+  }
+
+  test("compiled code survives across ticks: a warm tick in the same " +
+      "session compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = java.nio.file.Files.createTempDirectory("graftjobc").toString
+    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
+    val services = Seq("CPU Usage", "Swap Usage")
+    def body(t: Long) = s"""{"data":{"row":[{"t":"$t","v":"42.50"}]}}"""
+    def tick(k: Int): Long = {
+      land(in, (s"h$k", "CPU Usage", body(1700000000L + k)),
+        ("h0", "Swap Usage", swapBody))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      NagiosEtlJob.runOnce(spark, in, out, ckpt, services)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    tick(1) // first append: no sink to dedup against yet
+    tick(2) // first dedup tick: compiles the anti-join plan
+    assert(tick(3) == 0)
+    // each tick landed its own CPU row; the re-sent Swap doc deduped
+    assert(spark.read.parquet(s"$out/data").count() == 6)
+  }
+
+  test("a scheme-less sink under '_'/'.' ancestor dirs still dedups: " +
+      "committed files are not taken for writer scratch") {
+    val base = java.nio.file.Files.createTempDirectory("graftjobs")
+    val root = base.resolve("_x").resolve(".y").toString
+    assert(!root.contains(":")) // a bare path, no scheme
+    val (in, out) = (s"$root/in", s"$root/out")
+    val services = Seq("CPU Usage")
+    land(in, ("h1", "CPU Usage", cpuBody))
+    NagiosEtlJob.runOnce(spark, in, out, s"$root/ckpt", services)
+    assert(spark.read.parquet(s"$out/data").count() == 1)
+    // the same doc re-sent: the committed row must suppress it
+    land(in, ("h1", "CPU Usage", cpuBody))
+    NagiosEtlJob.runOnce(spark, in, out, s"$root/ckpt", services)
+    assert(spark.read.parquet(s"$out/data").count() == 1)
   }
 
   test("pre-load_date sink keeps its old layout: full-sink dedup, no " +
